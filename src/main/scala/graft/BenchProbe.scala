@@ -145,7 +145,6 @@ object BenchProbe {
     var depth = 3
     var burst = 8
     var rounds = 4
-    var incHeads = false
     var store = false
     var robots = false
     args.drop(2).foreach { kv =>
@@ -158,7 +157,6 @@ object BenchProbe {
         case "depth" => depth = v.toInt
         case "burst" => burst = v.toInt
         case "rounds" => rounds = v.toInt
-        case "incHeads" => incHeads = v.toBoolean
         case "store" => store = v.toBoolean // docs/digests store ON
         case "robots" => robots = v.toBoolean
         case _ => builder.config(k, v)
@@ -179,7 +177,6 @@ object BenchProbe {
       bloomExpected = 64L << 20,
       checkpointEvery = 99,
       statePartitions = stateParts,
-      incrementalHeads = incHeads,
       logRounds = true,
       stateStorage = storage)
     val work = s"$workBase-$threads-${System.currentTimeMillis()}"

@@ -9,8 +9,7 @@ import graft.synth.SyntheticWeb
   * {{{
   *   graft.Main crawl  --workDir DIR [--sites N] [--degree N] [--maxDepth N]
   *                     [--seeds N] [--rounds N] [--burst N] [--budget N]
-  *                     [--hostDelay N] [--ipDelay N] [--noBloom]
-  *                     [--incrementalHeads]
+  *                     [--hostDelay N] [--ipDelay N]
   *   graft.Main trace  --workDir DIR            # print the crawl trace
   *   graft.Main metrics --workDir DIR           # print per-round metrics
   * }}}
@@ -69,8 +68,6 @@ object Main {
         burst = opts.getOrElse("burst", "2").toInt,
         maxUrlsPerHost = opts.getOrElse("budget", Long.MaxValue.toString).toLong,
         maxRounds = opts.getOrElse("rounds", "8").toInt,
-        useBloom = !opts.contains("noBloom"),
-        incrementalHeads = opts.contains("incrementalHeads"),
         statePartitions = opts.getOrElse("statePartitions",
           spark.sparkContext.defaultParallelism.toString).toInt)
 

@@ -86,14 +86,14 @@ case class CrawlConfig(
       * link gate (frontier-only benchmark; the north metric is URLs
       * scheduled+deduped/sec — the store is the WARC-sink side) */
     storeDocs: Boolean = true,
-    useBloom: Boolean = true,
     bloomFpp: Double = 0.03,
     /** consolidate the per-round delta blooms into one full filter built
       * distributed from the seen table once this many deltas accumulate */
     bloomMaxDeltas: Int = 12,
     bloomExpected: Long = 4L << 20,
     /** below this seen-size the bloom prefilter is skipped (anti-join alone
-      * is cheaper than building + broadcasting the filter) */
+      * is cheaper than building + broadcasting the filter); Long.MaxValue
+      * turns the bloom bank off */
     bloomMinSeen: Long = 50000L,
     /** candidate batches at or below this size probe the seen table via a
       * broadcast hash set (scan, no shuffle); above it, sort-merge anti-join */
@@ -118,15 +118,6 @@ case class CrawlConfig(
       * parts (plan-size hygiene between compactions) */
     tombstoneFoldParts: Int = 32,
     logRounds: Boolean = false,
-    /** INCREMENTAL per-host heads maintenance (the 10^10-frontier mode):
-      * selection reads a per-host top-K state table updated from the
-      * round's deltas instead of re-aggregating the whole frontier every
-      * round; only "dirty" hosts (heads drained below the window while
-      * pending rows remain outside the kept K) trigger a frontier re-scan.
-      * Exact — oracle-parity-tested. Worthwhile when pending-per-host ≫ K
-      * (the real web); at small pending-per-host the heads state is the
-      * frontier re-materialized, so the default full aggregation wins. */
-    incrementalHeads: Boolean = false,
     /** storage level for in-memory state blocks between snapshots */
     stateStorage: String = "MEMORY_AND_DISK")
 
@@ -168,15 +159,9 @@ case class FetchUnit(
   * selected burst and the new-link batch. No full-frontier sort, window,
   * or join-back remains on the round path.
   *
-  * The remaining O(frontier)-per-round term is that heads scan. The
-  * 10^10-frontier alternative is `cfg.incrementalHeads`: a per-host top-K
-  * state table updated per round from the deltas and per-host consumed
-  * lists (see [[updateHeadsState]]), where only "dirty" hosts — drained
-  * below the selection window with pending rows outside the kept K, a
-  * subset of the round's SELECTED hosts — trigger a frontier re-scan
-  * (bucket-pruned with Iceberg hostHash-bucketed state). Hosts with ≤ K
-  * pending — the overwhelming majority of the web — never trigger a
-  * frontier scan at all. Exact; oracle-parity-tested.
+  * That heads aggregation is the one O(frontier)-per-round term; BASELINE.md
+  * records the measurement that retired the incremental per-host top-K
+  * alternative (slower at every scale measured).
   *
   * State layout under `workDir` (the Iceberg-snapshot analog):
   * {{{
@@ -325,74 +310,6 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     * skips at the queue head */
   private val kHeads = math.max(1, cfg.burst + cfg.headSlack)
 
-  /** incremental-heads kept size: one full selection window of slack
-    * (per-round consumption ≤ kHeads, so an oversized host survives a
-    * selected round before its refill) */
-  private val headsK = kHeads * 2
-
-  /** Full heads-state rebuild from a pending view (init / resume from a
-    * snapshot written without one). */
-  private def buildHeadsState(pending: DataFrame): DataFrame =
-    pending.groupBy("hostHash").agg(
-      topk_heads(col("seq"), col("url"), col("urlHash"), headsK).as("heads"),
-      count(lit(1)).as("pendingCnt"))
-
-  private val headsArrType = "array<struct<seq:bigint,url:string,urlHash:bigint>>"
-
-  /** One round of EXACT incremental heads maintenance.
-    *
-    * Invariant: `heads` holds the min(headsK, pendingCnt) smallest pending
-    * entries of the host, seq-ascending. Exactness leans on two facts:
-    * consumed entries always come from the selection window (the smallest
-    * kHeads), and seq assignment is MONOTONE — every addition is larger
-    * than every existing pending row, so for a COMPLETE host (no pending
-    * rows outside `heads`) additions simply append (capped at headsK),
-    * and for an incomplete host additions can never precede the outside
-    * rows, so the kept array is left untouched. The only hosts that need
-    * a frontier re-scan ("dirty") are those whose array drained below the
-    * selection window while pending rows remain outside — a subset of the
-    * hosts SELECTED this round, so per-round frontier work is ∝ the
-    * politeness-bounded selection, not the frontier (with hostHash-
-    * bucketed state the refill is additionally a bucket-pruned read).
-    *
-    * @param consumed (hostHash, __cons: array of consumed urlHashes)
-    * @param addAgg   (hostHash, __add: K-capped additions, __addN: count)
-    * @param pendingNext the post-round pending frontier view (refill source)
-    */
-  private def updateHeadsState(headsState: DataFrame, consumed: DataFrame,
-      addAgg: DataFrame, pendingNext: DataFrame): DataFrame = {
-    val emptyArr = array().cast(headsArrType)
-    val joined = headsState
-      .join(consumed, Seq("hostHash"), "left")
-      .join(addAgg, Seq("hostHash"), "full_outer")
-    val h0 = coalesce(col("heads"), emptyArr)
-    val afterCons = when(col("__cons").isNull, h0)
-      .otherwise(filter(h0, e => !array_contains(col("__cons"), e.getField("urlHash"))))
-    val m1 = joined.select(
-      col("hostHash"),
-      afterCons.as("__h1"),
-      (coalesce(col("pendingCnt"), lit(0L))
-        - (size(h0) - size(afterCons)).cast("long")).as("__p1"),
-      col("__add"), coalesce(col("__addN"), lit(0L)).as("__addN"))
-    val complete = col("__p1") === size(col("__h1")).cast("long")
-    val m2 = m1.select(
-      col("hostHash"),
-      when(complete && col("__addN") > 0,
-          slice(concat(col("__h1"), coalesce(col("__add"), emptyArr)), 1, headsK))
-        .otherwise(col("__h1")).as("heads"),
-      (col("__p1") + col("__addN")).as("pendingCnt"))
-    val dirtyHosts = m2
-      .where(col("pendingCnt") > size(col("heads")) && size(col("heads")) < kHeads)
-      .select("hostHash")
-    val refill = pendingNext
-      .join(broadcast(dirtyHosts), Seq("hostHash"), "left_semi")
-      .groupBy("hostHash")
-      .agg(topk_heads(col("seq"), col("url"), col("urlHash"), headsK).as("__r"))
-    lc(m2.join(refill, Seq("hostHash"), "left")
-      .select(col("hostHash"), coalesce(col("__r"), col("heads")).as("heads"),
-        col("pendingCnt")))
-  }
-
   private val gatesTrivial =
     cfg.parseFilter == "true" && cfg.followFilter == "true" && cfg.storeFilter == "true"
 
@@ -407,11 +324,7 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
         * folded when the chain gets long); only deltas are ever
         * re-materialized, never the accumulated set. */
       tombstones: DataFrame, pendingRows: Long, tombRows: Long,
-      tombParts: Int = 0,
-      /** incremental-heads state (hostHash, heads: sorted array of the
-        * up-to-K smallest pending entries, pendingCnt); null unless
-        * cfg.incrementalHeads */
-      headsState: DataFrame = null)
+      tombParts: Int = 0)
   private var live: Option[LiveState] = None
 
   // ---------------- initialization (round 0) ----------------
@@ -439,13 +352,12 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     frontier.select("urlHash").write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(appendDir("seen", 0))
     val hosts = newHostsFrom(frontier, emptyHosts).transform(lc)
     val ips = newIpsFrom(frontier, emptyIps).transform(lc)
-    val headsInit = if (cfg.incrementalHeads) lc(buildHeadsState(frontier)) else null
     val maxSeq = frontier.count()
-    writeState(0, frontier, hosts, ips, maxSeq, cfg.initialFrontSize, headsInit)
-    live = Some(LiveState(0, maxSeq, cfg.initialFrontSize, frontier, hosts, ips,
+    val st = LiveState(0, maxSeq, cfg.initialFrontSize, frontier, hosts, ips,
       frontier.select("urlHash").transform(lc), emptyDigests,
-      emptyTombstones, pendingRows = maxSeq, tombRows = 0L,
-      headsState = headsInit))
+      emptyTombstones, pendingRows = maxSeq, tombRows = 0L)
+    writeState(st)
+    live = Some(st)
   }
 
   private def emptyHosts = spark.emptyDataset[HostState].toDF
@@ -481,9 +393,10 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
       .withColumn("nextFetch", lit(0L))
       .select("ipHash", "nextFetch")
 
-  private def writeState(round: Int, frontier: DataFrame, hosts: DataFrame,
-      ips: DataFrame, maxSeq: Long, frontSize: Long,
-      headsState: DataFrame = null): Unit = {
+  /** Snapshot `st` as round `st.round` (frontier compacted). */
+  private def writeState(st: LiveState): Unit = {
+    val round = st.round
+    val frontier = compactFrontier(st.frontier, st.tombstones, st.tombRows)
     // Frontier and hosts are laid out by hostHash — the reference's
     // agent-assignment function (BubingJob.java:47-52); at cluster scale
     // this becomes Iceberg bucket partitioning so the per-round
@@ -491,20 +404,15 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     inParallel(
       () => frontier.repartition(cfg.statePartitions, col("hostHash"))
         .write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(stateDir(round, "frontier")),
-      () => hosts.repartition(math.max(1, cfg.statePartitions / 4), col("hostHash"))
+      () => st.hosts.repartition(math.max(1, cfg.statePartitions / 4), col("hostHash"))
         .write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(stateDir(round, "hosts")),
-      () => ips.repartition(math.max(1, cfg.statePartitions / 4), col("ipHash"))
-        .write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(stateDir(round, "ips")),
-      () => if (headsState != null)
-        headsState.repartition(math.max(1, cfg.statePartitions / 4), col("hostHash"))
-          .write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(stateDir(round, "heads")))
+      () => st.ips.repartition(math.max(1, cfg.statePartitions / 4), col("ipHash"))
+        .write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(stateDir(round, "ips")))
     // scalars LAST: its _SUCCESS is the snapshot-completeness marker.
-    // headsK is persisted so a resume can detect a window-size change
-    // (burst/headSlack grown between runs) and rebuild the heads state —
-    // the persisted arrays are sized for the OLD window and would silently
-    // truncate the first selection otherwise.
-    Seq((maxSeq, round, frontSize, headsK))
-      .toDF("maxSeq", "round", "frontSize", "headsK")
+    // Readers select scalars by name, so extra columns of older snapshots
+    // (headsK) are ignored.
+    Seq((st.maxSeq, round, st.frontSize))
+      .toDF("maxSeq", "round", "frontSize")
       .coalesce(1).write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(stateDir(round, "scalars"))
   }
 
@@ -525,24 +433,11 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     val maxSeq = sc.getAs[Long]("maxSeq")
     val frontSize = sc.getAs[Long]("frontSize")
     val frontier = spark.read.parquet(stateDir(round, "frontier"))
-    // heads arrays are sized for the headsK in force when the snapshot was
-    // written; a config change (burst/headSlack) invalidates them
-    val snapHeadsK =
-      if (sc.schema.fieldNames.contains("headsK")) sc.getAs[Int]("headsK") else -1
-    val headsState =
-      if (!cfg.incrementalHeads) null
-      else if (snapHeadsK == headsK && exists(stateDir(round, "heads") + "/_SUCCESS"))
-        spark.read.parquet(stateDir(round, "heads"))
-      // snapshot written without a heads table (mode toggled on) or with a
-      // different window size: rebuild from the (compacted = pending)
-      // frontier snapshot
-      else lc(buildHeadsState(frontier))
     LiveState(round, maxSeq, frontSize, frontier,
       spark.read.parquet(stateDir(round, "hosts")),
       spark.read.parquet(stateDir(round, "ips")),
       readSeen(round), readDigests(round),
-      emptyTombstones, pendingRows = frontier.count(), tombRows = 0L,
-      headsState = headsState)
+      emptyTombstones, pendingRows = frontier.count(), tombRows = 0L)
   }
 
   // ---------------- bloom bank (broadcast-refreshed URL-seen filter) ----------------
@@ -569,7 +464,7 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
 
   private def bloomFilters(state: LiveState)
       : Seq[org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter]] = {
-    if (!cfg.useBloom || state.maxSeq < cfg.bloomMinSeen) return Nil
+    if (state.maxSeq < cfg.bloomMinSeen) return Nil
     if (bloomRound != state.round || bloomBank.isEmpty) {
       // cold start / resume: one consolidated filter from the seen table,
       // sized by the ACTUAL seen row count (maxSeq counts every sieved
@@ -599,7 +494,6 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     * consolidate when the bank is long. */
   private def extendBloom(delta: org.apache.spark.util.sketch.BloomFilter,
       round: Int): Unit = {
-    if (!cfg.useBloom) return
     if (bloomRound >= 0 && bloomBank.nonEmpty) {
       if (delta != null)
         bloomBank :+= spark.sparkContext.broadcast(delta)
@@ -661,15 +555,8 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     // full-frontier ordering. Priority = head seq (FIFO per host,
     // VisitState.java:284-304); the inner join doubles as the
     // has-pending-work filter.
-    val heads =
-      if (cfg.incrementalHeads && st.headsState != null)
-        // the maintained state's first kHeads entries ARE the window
-        // (invariant: heads = min(headsK, pendingCnt) smallest pending) —
-        // no frontier scan at selection time
-        st.headsState.where(size(col("heads")) > 0)
-          .select(col("hostHash"), slice(col("heads"), 1, kHeads).as("heads"))
-      else frontier.groupBy("hostHash")
-        .agg(topk_heads(col("seq"), col("url"), col("urlHash"), kHeads).as("heads"))
+    val heads = frontier.groupBy("hostHash")
+      .agg(topk_heads(col("seq"), col("url"), col("urlHash"), kHeads).as("heads"))
 
     val nowC = ref_long(now, "now")
     val ipReady = ips.where(col("nextFetch") <= nowC).select("ipHash")
@@ -859,69 +746,21 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
       case l: java.lang.Long => l.longValue()
     }
     if (fetchedCount == 0) {
-      val disLc = if (windowGatesActive) disallowed.transform(lc) else null
-      val disRows = if (disLc == null) 0L else disLc.count()
-      if (disRows == 0) {
-        // politeness wait: carry state forward, snapshot on cadence
-        val snapped = maybeSnapshot(round, frontier, hosts, ips, maxSeq, st.frontSize,
-          force = false, headsState = st.headsState)
-        live = Some(
-          if (snapped)
-            st.copy(round = round,
-              frontier = spark.read.parquet(stateDir(round, "frontier")),
-              tombstones = emptyTombstones, tombRows = 0L, tombParts = 0)
-          else st.copy(round = round))
-      } else {
-        // zero fetches but the head gate DID drop URLs: commit the window
-        // tombstones and advance the all-disallowed hosts' nextFetch, or
-        // the identical empty round would repeat until maxRounds
-        // (mirrored in OracleCrawler)
-        val hostDelayRef0 = ref_long(now + cfg.hostDelay, "nowHostDelay")
-        val hostsNext = hosts
+      // a politeness wait, or the head gate dropped URLs: then commit the
+      // window tombstones and advance the all-disallowed hosts' nextFetch,
+      // or the identical empty round would repeat until maxRounds
+      // (mirrored in OracleCrawler)
+      val (disLc, disRows) =
+        if (windowGatesActive) { val d = lc(disallowed); (d, d.count()) } else (null, 0L)
+      val hostsNext =
+        if (disRows == 0) hosts
+        else hosts
           .join(broadcast(windowOnlyHosts.withColumn("__wo", lit(true))), Seq("hostHash"), "left")
-          .withColumn("nextFetch",
-            when(coalesce(col("__wo"), lit(false)), hostDelayRef0).otherwise(col("nextFetch")))
+          .withColumn("nextFetch", when(coalesce(col("__wo"), lit(false)),
+            ref_long(now + cfg.hostDelay, "nowHostDelay")).otherwise(col("nextFetch")))
           .drop("__wo")
-        // lazy union with the (already lc'd) disallowed delta — the
-        // accumulated tombstone set is never re-materialized; fold the
-        // union chain when it gets long (same plan-size hygiene as the
-        // fetch path — a streak of zero-fetch disallowed rounds would
-        // otherwise grow it unboundedly)
-        val (tombstonesNext, tombPartsNext0) =
-          if (st.tombParts >= cfg.tombstoneFoldParts) (lc(st.tombstones.unionByName(disLc)), 1)
-          else (st.tombstones.unionByName(disLc), st.tombParts + 1)
-        val tombRowsNext = st.tombRows + disRows
-        val headsNext0 =
-          if (!cfg.incrementalHeads) null
-          else {
-            val consumed0 = gated
-              .select(col("hostHash"), explode(col("__dropped")).as("__d"))
-              .select(col("hostHash"), col("__d.urlHash").as("urlHash"))
-              .groupBy("hostHash").agg(collect_set(col("urlHash")).as("__cons"))
-            val addEmpty = st.frontier.limit(0).groupBy("hostHash").agg(
-              topk_heads(col("seq"), col("url"), col("urlHash"), headsK).as("__add"),
-              count(lit(1)).as("__addN"))
-            val pendingNext0 = st.frontier
-              .join(broadcast(tombstonesNext), Seq("urlHash"), "left_anti")
-            updateHeadsState(st.headsState, consumed0, addEmpty, pendingNext0)
-          }
-        lazy val compactedNext = compactFrontier(st.frontier, tombstonesNext, tombRowsNext)
-        val snapped = maybeSnapshot(round, compactedNext, hostsNext, ips, maxSeq,
-          st.frontSize, force = false, headsState = headsNext0)
-        val (fNext, tombNext, tombRowsFinal, tombPartsFinal) =
-          if (snapped) (spark.read.parquet(stateDir(round, "frontier")), emptyTombstones, 0L, 0)
-          else if (tombRowsNext >= cfg.tombstoneCompactRows)
-            (compactedNext.repartition(cfg.statePartitions * 4, col("hostHash")).transform(lc),
-              emptyTombstones, 0L, 0)
-          else (st.frontier, tombstonesNext, tombRowsNext, tombPartsNext0)
-        val hNext =
-          if (snapped) spark.read.parquet(stateDir(round, "hosts"))
-          else hostsNext.transform(lc)
-        live = Some(st.copy(round = round, frontier = fNext, hosts = hNext,
-          tombstones = tombNext, pendingRows = st.pendingRows - disRows,
-          tombRows = tombRowsFinal, tombParts = tombPartsFinal,
-          headsState = headsNext0))
-      }
+      live = Some(commit(foldTombstones(st, disLc, disRows).copy(round = round, hosts = hostsNext),
+        hostsMem = if (disRows == 0) hosts else lc(hostsNext), ipsMem = ips))
       bloomRound = round
       fetched0.unpersist(); selected.unpersist()
       return 0
@@ -1083,7 +922,7 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     val blooms = bloomFilters(st)
     // delta blooms extend an EXISTING bank (cold-start rounds build the
     // consolidated filter instead next round)
-    val wantDeltaBloom = cfg.useBloom && bloomRound >= 0 && bloomBank.nonEmpty
+    val wantDeltaBloom = bloomRound >= 0 && bloomBank.nonEmpty
     // parentSeq bounds of this round's links drive the deterministic rank
     // buckets (from the trace-write Observation's scalars)
     val (loSeq, hiSeq) = obsRow("lo") match {
@@ -1102,9 +941,7 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     // one engine-controllable efficiency term). Here the dependents
     // launch the moment the sieve gate completes. ---
     var sievedInput: DataFrame = null
-    var tombstonesNext: DataFrame = null
-    var tombRowsNext = 0L
-    var tombPartsNext = 0
+    var tombs: LiveState = null
     var sieved: DataFrame = null
     var sieveOut = 0L
     var newDelta: DataFrame = null
@@ -1148,25 +985,11 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
         }
         newDigests.write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(appendDir("digests", round))
       },
-      // host-state update (materializes the hostsU cache + hostAgg
-      // broadcast) and the tombstone DELTA fold — both independent of the
-      // sieve. Only the per-round delta (∝ burst) is materialized; the
-      // accumulated set stays a lazy union of already-lc'd blocks —
-      // re-materializing the whole union here was an O(accumulated
-      // tombstones) copy per round, a cost that grows with the crawl.
+      // the tombstone DELTA fold, independent of the sieve (its dropped-URL
+      // part materializes the hostsU cache + hostAgg broadcast)
       () => {
         val deltaLc = lc(tombstoneDelta)
-        val deltaRows = deltaLc.count() // cheap: counts the lc'd blocks
-        if (st.tombParts >= cfg.tombstoneFoldParts) {
-          // plan-size hygiene: fold a long union chain (politeness-heavy
-          // crawls accumulate many small deltas between compactions)
-          tombstonesNext = lc(st.tombstones.unionByName(deltaLc))
-          tombPartsNext = 1
-        } else {
-          tombstonesNext = st.tombstones.unionByName(deltaLc)
-          tombPartsNext = st.tombParts + 1
-        }
-        tombRowsNext = st.tombRows + deltaRows
+        tombs = foldTombstones(st, deltaLc, deltaLc.count()) // cheap: counts the lc'd blocks
       }),
       // link batch + sieve (the GATE): the seen store is only ever
       // SCANNED, never shuffled/sorted/broadcast (scan-probe; the r2 SMJ
@@ -1246,7 +1069,6 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
         } else extendBloom(null, round)
       }))
 
-    val frontierNext = st.frontier.unionByName(newDelta)
     val dedupOut =
       if (cfg.maxUrlsPerHost == Long.MaxValue) sieveOut else newDelta.count()
 
@@ -1312,34 +1134,16 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
 
     // --- commit: snapshot on cadence, thread state in memory otherwise ---
     // all state materializations + the metrics sink are independent
-    val snapDue = cfg.checkpointEvery <= 1 || round % cfg.checkpointEvery == 0
+    val snapDue = snapshotDue(round)
     var hNextMem: DataFrame = null
     var iNextMem: DataFrame = null
     var digestsLc: DataFrame = null
-    var headsNextV: DataFrame = null
     var selHosts = 0L
     inParallel(
       () => metricsOut.write.options(graft.util.FastLocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(appendDir("metrics", round)),
       () => if (!snapDue) hNextMem = hostsNext.transform(lc),
       () => if (!snapDue) iNextMem = ipsNext.transform(lc),
       () => if (cfg.storeDocs) digestsLc = newDigests.transform(lc),
-      () => if (cfg.incrementalHeads) {
-        // consumed = exactly the tombstoned page URLs, keyed by host
-        val consumed = fetched.where(!col("isRobots") && col("excClass").isNull)
-          .select(col("hostHash"), col("urlHash"))
-          .unionByName(gated
-            .select(col("hostHash"), explode(col("__dropped")).as("__d"))
-            .select(col("hostHash"), col("__d.urlHash").as("urlHash")))
-          .unionByName(hostsU.where(col("__drop"))
-            .select(col("hostHash"), col("__dropHash").as("urlHash")))
-          .groupBy("hostHash").agg(collect_set(col("urlHash")).as("__cons"))
-        val addAgg = newDelta.groupBy("hostHash").agg(
-          topk_heads(col("seq"), col("url"), col("urlHash"), headsK).as("__add"),
-          count(lit(1)).as("__addN"))
-        val pendingNext = frontierNext
-          .join(broadcast(tombstonesNext), Seq("urlHash"), "left_anti")
-        headsNextV = updateHeadsState(st.headsState, consumed, addAgg, pendingNext)
-      },
       () => if (frontActive) selHosts = fetched.select("hostHash").distinct().count())
 
     // adaptive front growth: a saturated round doubles the cap
@@ -1349,41 +1153,13 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
         val grown = st.frontSize * cfg.frontGrowth
         if (grown > 0) grown else Long.MaxValue
       } else st.frontSize
-    val pendingRowsNext = st.pendingRows + dedupOut - (tombRowsNext - st.tombRows)
-
-    // compaction/snapshot is bloom-prefiltered + DISTRIBUTED exact
-    // anti-join (no driver-built broadcast: at compaction the tombstone
-    // set is millions of rows and the driver-side hash-relation build is
-    // a non-scaling cost; the per-round pending view keeps the broadcast
-    // because between compactions the set stays small). Lazy: the bloom
-    // build is a job, paid only on the rounds that actually compact.
-    lazy val compactedNext = compactFrontier(frontierNext, tombstonesNext, tombRowsNext)
-    val snapped = maybeSnapshot(round, compactedNext, hostsNext, ipsNext,
-      maxSeq + sieveOut, frontSizeNext, force = false, headsState = headsNextV)
-    val (fNext, tombNext, tombRowsFinal, tombPartsFinal) =
-      if (snapped)
-        (spark.read.parquet(stateDir(round, "frontier")), emptyTombstones, 0L, 0)
-      else if (tombRowsNext >= cfg.tombstoneCompactRows)
-        // amortized GC; re-spread by hostHash: the SMJ output would
-        // otherwise collapse to shuffle.partitions partitions whose
-        // per-partition distinct-host counts push the heads aggregation
-        // into its sort-based fallback (and hostHash layout lets the next
-        // heads groupBy skip its exchange entirely)
-        (compactedNext.repartition(cfg.statePartitions * 4, col("hostHash"))
-          .transform(lc), emptyTombstones, 0L, 0)
-      else (frontierNext, tombstonesNext, tombRowsNext, tombPartsNext)
-    val (hNext, iNext) =
-      if (snapped)
-        (spark.read.parquet(stateDir(round, "hosts")),
-          spark.read.parquet(stateDir(round, "ips")))
-      else (hNextMem, iNextMem)
-    val seenNext = seen.unionByName(sievedInput.select("urlHash"))
-    val digestsNext =
-      if (cfg.storeDocs) st.digests.unionByName(digestsLc)
-      else st.digests
-    live = Some(LiveState(round, maxSeq + sieveOut, frontSizeNext, fNext, hNext, iNext,
-      seenNext, digestsNext, tombNext, pendingRowsNext, tombRowsFinal,
-      tombParts = tombPartsFinal, headsState = headsNextV))
+    live = Some(commit(tombs.copy(round = round, maxSeq = maxSeq + sieveOut,
+        frontSize = frontSizeNext, frontier = st.frontier.unionByName(newDelta),
+        hosts = hostsNext, ips = ipsNext,
+        seen = seen.unionByName(sievedInput.select("urlHash")),
+        digests = if (cfg.storeDocs) st.digests.unionByName(digestsLc) else st.digests,
+        pendingRows = tombs.pendingRows + dedupOut),
+      hostsMem = hNextMem, ipsMem = iNextMem))
 
     fetched0.unpersist(); selected.unpersist()
     parsedLinks.unpersist(); hostsU.unpersist()
@@ -1391,20 +1167,58 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
     fetchedCount
   }
 
-  /** Snapshot the state tables when the cadence (or `force`) says so.
-    * `frontier` is by-name: the compacted view costs a bloom-build job
-    * (see [[compactFrontier]]) that must not run on the rounds that skip
-    * the snapshot. */
-  private def maybeSnapshot(round: Int, frontier: => DataFrame, hosts: DataFrame,
-      ips: DataFrame, maxSeq: Long, frontSize: Long, force: Boolean,
-      headsState: DataFrame = null): Boolean = {
-    val due = force || cfg.checkpointEvery <= 1 || round % cfg.checkpointEvery == 0
-    if (due) writeState(round, frontier, hosts, ips, maxSeq, frontSize, headsState)
-    due
+  private def snapshotDue(round: Int): Boolean =
+    cfg.checkpointEvery <= 1 || round % cfg.checkpointEvery == 0
+
+  /** Append a round's lc'd tombstone delta (`deltaRows` rows) to the lazy
+    * union chain and take its rows out of the pending count. Only deltas
+    * (∝ burst) are ever materialized; re-materializing the accumulated set
+    * every round would be a copy that grows with the crawl. A chain of
+    * `tombstoneFoldParts` parts is folded into one block (plan-size
+    * hygiene: politeness-heavy crawls accumulate many small deltas between
+    * compactions). An empty delta leaves the state as it is. */
+  private def foldTombstones(st: LiveState, deltaLc: DataFrame, deltaRows: Long): LiveState =
+    if (deltaRows == 0) st
+    else {
+      val fold = st.tombParts >= cfg.tombstoneFoldParts
+      val chain = st.tombstones.unionByName(deltaLc)
+      st.copy(tombstones = if (fold) lc(chain) else chain,
+        tombParts = if (fold) 1 else st.tombParts + 1,
+        tombRows = st.tombRows + deltaRows, pendingRows = st.pendingRows - deltaRows)
+    }
+
+  /** Commit a round's next state, for fetch and zero-fetch rounds alike. On
+    * the snapshot cadence the state is written (frontier compacted) and read
+    * back. Otherwise the frontier is compacted in memory once
+    * `tombstoneCompactRows` tombstones accumulate, or else carried forward
+    * with its lazy tombstone chain; `hostsMem`/`ipsMem` are the materialized
+    * tables carried when no snapshot is written. */
+  private def commit(next: LiveState, hostsMem: => DataFrame, ipsMem: => DataFrame): LiveState = {
+    val round = next.round
+    val cleared = next.copy(tombstones = emptyTombstones, tombRows = 0L, tombParts = 0)
+    if (snapshotDue(round)) {
+      writeState(next)
+      cleared.copy(frontier = spark.read.parquet(stateDir(round, "frontier")),
+        hosts = spark.read.parquet(stateDir(round, "hosts")),
+        ips = spark.read.parquet(stateDir(round, "ips")))
+    } else if (next.tombRows >= cfg.tombstoneCompactRows)
+      // amortized GC; re-spread by hostHash: the SMJ output would
+      // otherwise collapse to shuffle.partitions partitions whose
+      // per-partition distinct-host counts push the heads aggregation
+      // into its sort-based fallback (and hostHash layout lets the next
+      // heads groupBy skip its exchange entirely)
+      cleared.copy(frontier = compactFrontier(next.frontier, next.tombstones, next.tombRows)
+          .repartition(cfg.statePartitions * 4, col("hostHash")).transform(lc),
+        hosts = hostsMem, ips = ipsMem)
+    else next.copy(hosts = hostsMem, ips = ipsMem)
   }
 
-  /** frontier ∖ tombstones for compaction/snapshot. A plain sort-merge
-    * anti-join sorts and shuffles the WHOLE frontier to delete a few
+  /** frontier ∖ tombstones for compaction/snapshot: bloom-prefiltered,
+    * DISTRIBUTED exact anti-join (no driver-built broadcast: at compaction
+    * the tombstone set is millions of rows and the driver-side hash-relation
+    * build is a non-scaling cost; the per-round pending view keeps the
+    * broadcast because between compactions the set stays small). A plain
+    * sort-merge anti-join sorts and shuffles the WHOLE frontier to delete a few
     * percent of its rows; instead probe a bloom built over the tombstone
     * hashes (one cheap pass over the lc'd deltas): rows the filter
     * rejects are definitely live and never shuffle, and only the
@@ -1441,10 +1255,7 @@ class Crawler(spark: SparkSession, workDir: String, cfg: CrawlConfig) {
 
   /** Force a snapshot of the current live state (used at end of run). */
   private def snapshotLive(): Unit = live.foreach { st =>
-    if (!exists(stateDir(st.round, "scalars") + "/_SUCCESS")) {
-      writeState(st.round, compactFrontier(st.frontier, st.tombstones, st.tombRows),
-        st.hosts, st.ips, st.maxSeq, st.frontSize, st.headsState)
-    }
+    if (!exists(stateDir(st.round, "scalars") + "/_SUCCESS")) writeState(st)
   }
 
   /** Run (or resume) the crawl up to cfg.maxRounds; returns rounds executed.

@@ -40,12 +40,17 @@ class OptimizedInternalsSpec extends AnyFunSuite {
   test("driver-side localBucket matches the Spark-evaluated bucket of the same vector") {
     val rnd = new scala.util.Random(13)
     val q = Array.fill(7)(rnd.nextGaussian())
+    // a NaN element makes every plane product NaN, which Spark orders
+    // above every value (sign bit 1)
+    val qNaN = q.updated(3, Double.NaN)
     val planes = 6
     val w = Similarity.planeWeights(planes, 7)
-    val sparkBucket = spark.range(1)
-      .select(Similarity.bucketExpr(array(q.map(lit): _*), planes).as("b"))
-      .head().getLong(0)
-    assert(Similarity.localBucket(q, w) == sparkBucket)
+    for (v <- Seq(q, qNaN)) {
+      val sparkBucket = spark.range(1)
+        .select(Similarity.bucketExpr(array(v.map(lit): _*), planes).as("b"))
+        .head().getLong(0)
+      assert(Similarity.localBucket(v, w) == sparkBucket, v.mkString(","))
+    }
   }
 
   test("lshTopK with a query longer than the corpus dimension still completes") {

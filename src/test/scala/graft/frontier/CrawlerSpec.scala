@@ -57,8 +57,8 @@ class CrawlerSpec extends AnyFunSuite {
     // even at spec scale (the default 50k gate would skip blooms entirely
     // on a tiny crawl and the test would compare identical code paths)
     val c1 = new Crawler(spark, d1,
-      cfg.copy(useBloom = true, bloomMinSeen = 1L, bloomExpected = 4096L, maxRounds = 4))
-    val c2 = new Crawler(spark, d2, cfg.copy(useBloom = false, maxRounds = 4))
+      cfg.copy(bloomMinSeen = 1L, bloomExpected = 4096L, maxRounds = 4))
+    val c2 = new Crawler(spark, d2, cfg.copy(bloomMinSeen = Long.MaxValue, maxRounds = 4))
     c1.run(); c2.run()
     assert(collectTrace(c1) == collectTrace(c2))
   }
@@ -71,7 +71,7 @@ class CrawlerSpec extends AnyFunSuite {
     // dropped broadcasts unpersisted) every 2 deltas — all performance-
     // shape knobs, so the crawl must be byte-identical to the default
     val c1 = new Crawler(spark, d1, cfg.copy(
-      useBloom = true, bloomMinSeen = 1L, bloomExpected = 4096L, bloomMaxDeltas = 2,
+      bloomMinSeen = 1L, bloomExpected = 4096L, bloomMaxDeltas = 2,
       tombstoneCompactRows = 50L, tombstoneFoldParts = 2,
       checkpointEvery = 99, maxRounds = 5))
     val c2 = new Crawler(spark, d2, cfg.copy(maxRounds = 5))
@@ -331,43 +331,15 @@ class CrawlerSpec extends AnyFunSuite {
     assertOracleParity(crawler, f, OracleCrawler.Gates(fetchOk = _ => false))
   }
 
-  test("incremental heads maintenance: spark == oracle, == full-aggregation crawl") {
-    val f = cfg.copy(incrementalHeads = true, maxRounds = 6)
-    val dir = tempDir("incheads")
-    val crawler = new Crawler(spark, dir, f)
-    crawler.run()
-    // identical to the full-aggregation mode...
-    val dirFull = tempDir("incheads-full")
-    val full = new Crawler(spark, dirFull, cfg.copy(maxRounds = 6))
-    full.run()
-    assert(collectTrace(crawler) == collectTrace(full),
-      "incremental heads changed the crawl")
-    // ...and to the oracle
-    assertOracleParity(crawler, f)
-  }
-
-  test("incremental heads under gates + exceptions + budget: spark == oracle") {
-    val f = cfg.copy(incrementalHeads = true,
+  test("fetch gate + exceptions + budget: spark == oracle") {
+    val f = cfg.copy(
       web = cfg.web.copy(failEvery = 4),
       fetchFilter = "not URLMatchesRegex(.*/3/.*)",
       maxUrlsPerHost = 9, maxRounds = 9)
-    val dir = tempDir("incheads-gates")
+    val dir = tempDir("gates-exc-budget")
     val crawler = new Crawler(spark, dir, f)
     crawler.run()
     assertOracleParity(crawler, f, OracleCrawler.Gates(fetchOk = u => !u.matches(".*/3/.*")))
-  }
-
-  test("incremental heads: resume from snapshot continues identically") {
-    val f = cfg.copy(incrementalHeads = true, maxRounds = 5)
-    val dFull = tempDir("incheads-res-full")
-    val full = new Crawler(spark, dFull, f)
-    full.run()
-    val dSplit = tempDir("incheads-res-split")
-    val part1 = new Crawler(spark, dSplit, f.copy(maxRounds = 2))
-    part1.run()
-    val part2 = new Crawler(spark, dSplit, f)
-    part2.run()
-    assert(collectTrace(full) == collectTrace(part2))
   }
 
   test("docs carry digests; duplicates are flagged deterministically") {
